@@ -461,7 +461,7 @@ object Search {
             graft.sources.Commits.committedRowCount(spark, s"$dir/docs",
               committed)))
           currentDocsFor(spark, dir, hashed.select(col(idCol).as("doc_id")))
-        else currentDocs(spark, dir)
+        else currentDocs(spark, dir, committed)
       val fresh = (cur match {
         case None => hashed
         case Some(c) =>
@@ -515,7 +515,7 @@ object Search {
           graft.sources.Commits.committedRowCount(spark, s"$dir/docs",
             committed)))
         currentDocsFor(spark, dir, idsF)
-      else currentDocs(spark, dir)
+      else currentDocs(spark, dir, committed)
         .map(_.join(idsF, Seq("doc_id"), "left_semi"))
     ).getOrElse { idsF.unpersist(); return 0L }
     val victims = cur
@@ -565,12 +565,9 @@ object Search {
       fs.delete(new org.apache.hadoop.fs.Path(stage), true)
     }
     val committed = committedBatches(spark, dir)
-    val cur = currentDocs(spark, dir).getOrElse(return)
-      .filter(col("content_hash") =!= Tombstone)
-    val curKeys = cur.select(col("doc_id"), col("batch"))
-    val livePost = readCommittedPostings(spark, dir, committed)
-      .join(curKeys, Seq("doc_id", "batch"))
-    livePost.withColumn("batch", lit(0L))
+    val cur = liveDocs(spark, dir, committed).getOrElse(return)
+    resolveLivePostings(spark, dir, committed).get
+      .withColumn("batch", lit(0L))
       .repartition(col("term"))
       .sortWithinPartitions(col("term"), col("doc_id"))
       .write.parquet(s"$stage/postings/b0")
@@ -894,12 +891,12 @@ object Search {
             org.apache.spark.sql.types.LongType))))
     }
 
-  /** CURRENT committed generation of every indexed doc:
-    * (doc_id, dl, content_hash, batch). None when nothing committed.
+  /** CURRENT committed generation of every indexed doc among the
+    * `committed` batches: (doc_id, dl, content_hash, batch). None when
+    * nothing is committed.
     */
   private def currentDocs(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Option[DataFrame] = {
-    val committed = committedBatches(spark, dir)
+      dir: String, committed: Seq[Long]): Option[DataFrame] = {
     if (committed.isEmpty) None
     // Freshly-maintained shortcut: one committed batch holds one row
     // per doc (every write path dedups within its batch), so the
@@ -925,9 +922,65 @@ object Search {
     */
   def indexLiveDocs(spark: org.apache.spark.sql.SparkSession,
       dir: String): Option[DataFrame] =
-    currentDocs(spark, dir).map(_
-      .filter(col("content_hash") =!= Tombstone)
-      .select(col("doc_id"), col("content_hash")))
+    liveDocs(spark, dir, committedBatches(spark, dir))
+      .map(_.select(col("doc_id"), col("content_hash")))
+
+  /** [[currentDocs]] without the tombstoned docs: the live corpus. */
+  private def liveDocs(spark: org.apache.spark.sql.SparkSession,
+      dir: String, committed: Seq[Long]): Option[DataFrame] =
+    currentDocs(spark, dir, committed)
+      .map(_.filter(col("content_hash") =!= Tombstone))
+
+  /** The LIVE postings of the `committed` generation: committed
+    * postings joined to each live doc's current (doc_id, batch), so
+    * superseded generations and tombstoned docs drop out. None when
+    * nothing is committed. The resolution behind every index probe
+    * ([[livePostings]] caches it per generation) and the full
+    * rewrites ([[indexVacuum]], [[bucketPostings]]).
+    */
+  private def resolveLivePostings(spark: org.apache.spark.sql.SparkSession,
+      dir: String, committed: Seq[Long]): Option[DataFrame] =
+    liveDocs(spark, dir, committed).map(cur =>
+      readCommittedPostings(spark, dir, committed)
+        .join(cur.select(col("doc_id"), col("batch")),
+          Seq("doc_id", "batch")))
+
+  /** BM25 corpus statistics of the live docs: document count and
+    * total length, as literal columns in the scoring expressions.
+    */
+  private final case class CorpusStats(nDocs: Long, sumDl: Long) {
+    def n: Column = lit(nDocs).cast("double")
+    def avgdl: Column = lit(sumDl).cast("double") / n
+  }
+
+  /** The index's live postings ([[resolveLivePostings]]) for its
+    * current committed generation, resolved once per generation and
+    * reused by every probe until the ledger moves
+    * ([[graft.sources.LiveViews]]).
+    */
+  private def livePostings(spark: org.apache.spark.sql.SparkSession,
+      dir: String, gen: graft.sources.Commits.Generation): DataFrame =
+    graft.sources.LiveViews.frame(spark, dir, "index.postings", gen)(
+      resolveLivePostings(spark, dir, gen.batches).get)
+
+  /** [[CorpusStats]] of the current committed generation, computed
+    * once per generation like [[livePostings]].
+    */
+  private def corpusStats(spark: org.apache.spark.sql.SparkSession,
+      dir: String, gen: graft.sources.Commits.Generation): CorpusStats =
+    graft.sources.LiveViews.value(spark, dir, "index.stats", gen) {
+      val r = liveDocs(spark, dir, gen.batches).get
+        .agg(count(lit(1)), sum(col("dl"))).head()
+      CorpusStats(r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+    }
+
+  /** The index's committed generation; probes refuse an empty store. */
+  private def probedGeneration(spark: org.apache.spark.sql.SparkSession,
+      dir: String): graft.sources.Commits.Generation = {
+    val gen = graft.sources.Commits.generation(spark, dir)
+    require(gen.batches.nonEmpty, s"no committed index state under $dir")
+    gen
+  }
 
   /** [[currentDocs]] restricted to `ids` (a one-column doc_id frame):
     * the docs scan is semi-joined against the id set BEFORE the
@@ -1008,7 +1061,7 @@ object Search {
       dir: String): DataFrame = {
     val committed = committedBatches(spark, dir)
     require(committed.nonEmpty, s"no committed index state under $dir")
-    val cur = currentDocs(spark, dir).get
+    val cur = currentDocs(spark, dir, committed).get
     val docsAgg = cur.agg(
       sum(when(col("content_hash") =!= Tombstone, 1L).otherwise(0L))
         .as("live_docs"),
@@ -1021,9 +1074,7 @@ object Search {
     val docRows = spark.read.option("recursiveFileLookup", "true")
       .parquet(s"$dir/docs")
       .agg(count(lit(1)).as("doc_rows_total"))
-    val livePost = readCommittedPostings(spark, dir, committed)
-      .join(cur.filter(col("content_hash") =!= Tombstone)
-        .select(col("doc_id"), col("batch")), Seq("doc_id", "batch"))
+    val livePost = resolveLivePostings(spark, dir, committed).get
       .agg(count(lit(1)).as("postings_rows_live"))
     val totalPost = spark.read.option("recursiveFileLookup", "true")
       .parquet(s"$dir/postings")
@@ -1039,43 +1090,39 @@ object Search {
         col("postings_rows_live"), col("postings_rows_total"))
   }
 
-  /** BM25 top-k answered FROM the standing index: filter postings to
-    * the query terms (pushed predicate — at scale this reads only the
-    * matching row groups / buckets, never the corpus), drop superseded
-    * generations by joining the hits against each doc's max committed
-    * batch (the hit set is already tiny), per-term df as one tiny
-    * aggregate broadcast back on term, then one hash-shuffle on doc_id
-    * to sum the per-(doc, term) micro-unit contributions. Bit-identical
-    * to [[bm25TopK]] over the index's CURRENT corpus state (same
+  /** BM25 top-k answered FROM the standing index: filter the index's
+    * live postings ([[livePostings]]: superseded generations and
+    * tombstoned docs already dropped, resolved once per committed
+    * generation) to the query terms, per-term df as one tiny aggregate
+    * broadcast back on term, then one hash-shuffle on doc_id to sum
+    * the per-(doc, term) micro-unit contributions. A probe of an
+    * unchanged index reads the cached view and the cached corpus
+    * stats; the first probe after a commit resolves them (one pass
+    * over the committed postings and docs). Bit-identical to
+    * [[bm25TopK]] over the index's CURRENT corpus state (same
     * contribution expression, same exact integer sum).
     */
   def bm25FromIndexTopK(spark: org.apache.spark.sql.SparkSession,
       dir: String, queryTerms: Seq[String], k: Int,
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(queryTerms.nonEmpty, "empty query")
-    val committed = committedBatches(spark, dir)
-    require(committed.nonEmpty, s"no committed index state under $dir")
-    val cur = currentDocs(spark, dir).get
-      .filter(col("content_hash") =!= Tombstone)
-    val hits = readCommittedPostings(spark, dir, committed)
-      .filter(col("term").isin(queryTerms: _*))
-      .join(cur.select(col("doc_id"), col("batch")), Seq("doc_id", "batch"))
-    val stats = cur
-      .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
-    scoreHits(hits, stats, k, k1, b)
+    val gen = probedGeneration(spark, dir)
+    scoreHits(livePostings(spark, dir, gen)
+        .filter(col("term").isin(queryTerms: _*)),
+      corpusStats(spark, dir, gen), k, k1, b)
   }
 
   /** Shared BM25 scoring tail over a resolved hit set (doc_id, tf, dl):
     * per-term df as one tiny aggregate broadcast back on term, the
-    * one-row corpus stats broadcast, per-(doc, term) contributions in
-    * exact micro-units, ONE doc_id hash-shuffle to sum them.
+    * corpus stats as literals, per-(doc, term) contributions in exact
+    * micro-units, ONE doc_id hash-shuffle to sum them.
     */
-  private def scoreHits(hits: DataFrame, stats: DataFrame, k: Int,
+  private def scoreHits(hits: DataFrame, stats: CorpusStats, k: Int,
       k1: Double, b: Double): DataFrame = {
     val dfs = hits.groupBy(col("term"))
       .agg(count(lit(1)).as("__df"))
-    val n = col("n_docs").cast("double")
-    val avgdl = col("sum_dl").cast("double") / col("n_docs").cast("double")
+    val n = stats.n
+    val avgdl = stats.avgdl
     val tf = col("tf").cast("double")
     val idf = log(lit(1.0) +
       (n - col("__df").cast("double") + lit(0.5)) /
@@ -1084,7 +1131,6 @@ object Search {
       lit(b) * col("dl").cast("double") / avgdl)
     hits
       .join(broadcast(dfs), Seq("term"))
-      .crossJoin(broadcast(stats))
       .select(col("doc_id"),
         round(idf * tf * lit(k1 + 1.0) / norm * lit(1e6)).cast("long")
           .as("__contrib"))
@@ -1117,11 +1163,7 @@ object Search {
    graft.sources.Commits.withWriterLock(spark, dir) {
     val committed = committedBatches(spark, dir)
     require(committed.nonEmpty, s"no committed index state under $dir")
-    val cur = currentDocs(spark, dir).get
-      .filter(col("content_hash") =!= Tombstone)
-      .select(col("doc_id"), col("batch"))
-    readCommittedPostings(spark, dir, committed)
-      .join(cur, Seq("doc_id", "batch"))
+    resolveLivePostings(spark, dir, committed).get
       // Pre-shuffle on the bucket function (repartition and bucketBy
       // both pmod-murmur3 the column), so each task holds exactly one
       // bucket and writes ONE file — not one file per bucket per task.
@@ -1148,12 +1190,9 @@ object Search {
       dir: String, table: String, queryTerms: Seq[String], k: Int,
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(queryTerms.nonEmpty, "empty query")
-    val cur = currentDocs(spark, dir).get
-      .filter(col("content_hash") =!= Tombstone)
     val hits = spark.table(table).filter(col("term").isin(queryTerms: _*))
-    val stats = cur
-      .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
-    scoreHits(hits, stats, k, k1, b)
+    scoreHits(hits, corpusStats(spark, dir, probedGeneration(spark, dir)),
+      k, k1, b)
   }
 
   /** MORE-LIKE-THIS top-k — BM25 where the query is a whole DOCUMENT's
@@ -1173,8 +1212,7 @@ object Search {
   def moreLikeThisTopK(spark: org.apache.spark.sql.SparkSession,
       dir: String, queryDoc: DataFrame, k: Int, maxTerms: Int = 64,
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val committed = committedBatches(spark, dir)
-    require(committed.nonEmpty, s"no committed index state under $dir")
+    val gen = probedGeneration(spark, dir)
     val idCol = queryDoc.columns(0)
     val textCol = queryDoc.columns(1)
     val toks = filter(split(trim(col(textCol)), " +"), x => x =!= "")
@@ -1191,19 +1229,14 @@ object Search {
           .orderBy(col("__qtf").desc, col("term"))))
       .filter(col("__rn") <= maxTerms)
       .select(col("__qid"), col("term"), col("__qtf"))
-    val cur = currentDocs(spark, dir).get
-      .filter(col("content_hash") =!= Tombstone)
     // df counts the query doc too (it is part of the corpus) — only
     // the SCORED set excludes it.
-    val hits0 = readCommittedPostings(spark, dir, committed)
+    val hits0 = livePostings(spark, dir, gen)
       .join(broadcast(qterms.withColumn("__qw",
         col("__qtf").cast("double")).drop("__qtf")), Seq("term"))
-      .join(cur.select(col("doc_id"), col("batch")), Seq("doc_id", "batch"))
     val hits = hits0.filter(col("doc_id").cast("string") =!= col("__qid"))
-    val stats = cur
-      .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
     val dfs = hits0.groupBy(col("term")).agg(count(lit(1)).as("__df"))
-    scoreWeightedHits(hits, dfs, stats, k, k1, b)
+    scoreWeightedHits(hits, dfs, corpusStats(spark, dir, gen), k, k1, b)
   }
 
   /** Shared WEIGHTED BM25 scoring tail of the query-by-terms-with-
@@ -1217,9 +1250,9 @@ object Search {
     * contribution formula (same guard as [[rrfFuseWithBm25]]).
     */
   private def scoreWeightedHits(hits: DataFrame, dfs: DataFrame,
-      stats: DataFrame, k: Int, k1: Double, b: Double): DataFrame = {
-    val n = col("n_docs").cast("double")
-    val avgdl = col("sum_dl").cast("double") / col("n_docs").cast("double")
+      stats: CorpusStats, k: Int, k1: Double, b: Double): DataFrame = {
+    val n = stats.n
+    val avgdl = stats.avgdl
     val tf = col("tf").cast("double")
     val idf = log(lit(1.0) +
       (n - col("__df").cast("double") + lit(0.5)) /
@@ -1228,7 +1261,6 @@ object Search {
       lit(b) * col("dl").cast("double") / avgdl)
     hits
       .join(broadcast(dfs), Seq("term"))
-      .crossJoin(broadcast(stats))
       .select(col("doc_id"),
         round(col("__qw") * idf * tf * lit(k1 + 1.0) / norm
           * lit(1e6)).cast("long").as("__contrib"))
@@ -1266,18 +1298,13 @@ object Search {
       fbDocs: Int = 5, fbTerms: Int = 8, fbWeight: Double = 0.5,
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(queryTerms.nonEmpty, "empty query")
-    val committed = committedBatches(spark, dir)
-    require(committed.nonEmpty, s"no committed index state under $dir")
-    val cur = currentDocs(spark, dir).get
-      .filter(col("content_hash") =!= Tombstone)
+    val gen = probedGeneration(spark, dir)
     val fb = bm25FromIndexTopK(spark, dir, queryTerms, fbDocs, k1, b)
       .select(col("doc_id"))
-    // Resolve the feedback docs to their current generation, then read
-    // their term vectors from the postings (no text is re-tokenized).
-    val curFb = cur.select(col("doc_id"), col("batch"))
+    // The feedback docs' term vectors come from the live postings (no
+    // text is re-tokenized).
+    val expTerms = livePostings(spark, dir, gen)
       .join(broadcast(fb), Seq("doc_id"))
-    val expTerms = readCommittedPostings(spark, dir, committed)
-      .join(broadcast(curFb), Seq("doc_id", "batch"))
       .filter(!col("term").isin(queryTerms: _*))
       .groupBy(col("term")).agg(sum(col("tf")).as("__w"))
       .orderBy(col("__w").desc, col("term"))
@@ -1288,13 +1315,10 @@ object Search {
       queryTerms.toDF("term").select(col("term"), lit(1.0).as("__qw"))
     }
     val qterms = origTerms.unionByName(expTerms)
-    val hits = readCommittedPostings(spark, dir, committed)
+    val hits = livePostings(spark, dir, gen)
       .join(broadcast(qterms), Seq("term"))
-      .join(cur.select(col("doc_id"), col("batch")), Seq("doc_id", "batch"))
-    val stats = cur
-      .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
     val dfs = hits.groupBy(col("term")).agg(count(lit(1)).as("__df"))
-    scoreWeightedHits(hits, dfs, stats, k, k1, b)
+    scoreWeightedHits(hits, dfs, corpusStats(spark, dir, gen), k, k1, b)
   }
 
   /** HYBRID retrieval — Reciprocal-Rank Fusion of the BM25 index
@@ -1322,6 +1346,11 @@ object Search {
     * falling back to the always-fresh generational store otherwise —
     * same answers either way, the 1000× probe-cost difference decided
     * per call from two file listings.
+    *
+    * Neither side re-resolves committed state per call: the BM25 side
+    * reads the index's per-generation live postings view, the
+    * generational ANN side the store's per-generation live rows, and
+    * the partitioned side a snapshot resolved at refresh time.
     */
   def hybridTopK(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, annDir: String, queryTerms: Seq[String],
@@ -1425,21 +1454,17 @@ object Search {
     *
     * — overlapping occurrences counted, exactly like the scan kernel,
     * so the answer is bit-identical to [[phraseTopK]] over the index's
-    * CURRENT corpus state (generation-resolved like
-    * [[bm25FromIndexTopK]]). Per-doc work is a handful of tiny sorted
-    * lists; the join fans out only to docs containing every term.
+    * CURRENT corpus state. The hits come from the same per-generation
+    * live postings view as [[bm25FromIndexTopK]]'s, so a probe of an
+    * unchanged index resolves no generations. Per-doc work is a
+    * handful of tiny sorted lists; the join fans out only to docs
+    * containing every term.
     */
   def phraseFromIndexTopK(spark: org.apache.spark.sql.SparkSession,
       dir: String, phrase: Seq[String], k: Int): DataFrame = {
     require(phrase.size >= 2, s"phrase needs >= 2 terms, got ${phrase.size}")
-    val committed = committedBatches(spark, dir)
-    require(committed.nonEmpty, s"no committed index state under $dir")
-    val cur = currentDocs(spark, dir).get
-      .filter(col("content_hash") =!= Tombstone)
-      .select(col("doc_id"), col("batch"))
-    val hits = readCommittedPostings(spark, dir, committed)
+    val hits = livePostings(spark, dir, probedGeneration(spark, dir))
       .filter(col("term").isin(phrase.distinct: _*))
-      .join(cur, Seq("doc_id", "batch"))
     phrasePositionFold(hits, phrase, k)
   }
 

@@ -607,6 +607,38 @@ object Similarity {
       .sortBy(_._1))
   }
 
+  /** The PQ store's committed generation; refuses a store never built. */
+  private def pqGeneration(spark: org.apache.spark.sql.SparkSession,
+      storeDir: String): graft.sources.Commits.Generation = {
+    val gen = graft.sources.Commits.generation(spark, storeDir)
+    require(gen.batches.nonEmpty,
+      s"$storeDir has no committed build - run pqStoreBuild first")
+    gen
+  }
+
+  /** [[pqReadCodebook]], read once per committed generation
+    * ([[graft.sources.LiveViews]]). */
+  private def pqCodebook(spark: org.apache.spark.sql.SparkSession,
+      storeDir: String, gen: graft.sources.Commits.Generation)
+      : Seq[Seq[(Long, Seq[Double])]] =
+    graft.sources.LiveViews.value(spark, storeDir, "pq.codebook", gen)(
+      pqReadCodebook(spark, storeDir))
+
+  /** [[pqReadCoarse]], read once per committed generation. */
+  private def pqCoarse(spark: org.apache.spark.sql.SparkSession,
+      storeDir: String, gen: graft.sources.Commits.Generation)
+      : Option[Seq[(Long, Seq[Double])]] =
+    graft.sources.LiveViews.value(spark, storeDir, "pq.coarse", gen)(
+      pqReadCoarse(spark, storeDir))
+
+  /** [[pqCurrentRows]] of the current committed generation, resolved
+    * once per generation and reused by every probe until the ledger
+    * moves. */
+  private def pqLiveRows(spark: org.apache.spark.sql.SparkSession,
+      storeDir: String, gen: graft.sources.Commits.Generation): DataFrame =
+    graft.sources.LiveViews.frame(spark, storeDir, "pq.rows", gen)(
+      pqCurrentRows(spark, storeDir, gen.batches))
+
   /** Encode `fresh` (id, v double-array, __vh) with `books` and commit
     * it as one generation of the PQ store. Store rows are
     * (id, codes array<long>, cell, vec_hash, batch) — m longs of code
@@ -739,12 +771,11 @@ object Similarity {
    graft.sources.Commits.withWriterLockUnless(batch.sparkSession, storeDir,
        heldLocks) {
     val spark = batch.sparkSession
-    val committed = graft.sources.Commits.committed(spark, storeDir)
-    require(committed.nonEmpty,
-      s"$storeDir has no committed build - run pqStoreBuild first")
-    val books = pqReadCodebook(spark, storeDir)
+    val gen = pqGeneration(spark, storeDir)
+    val committed = gen.batches
+    val books = pqCodebook(spark, storeDir, gen)
     val subDims = books.head.head._2.size
-    val coarse = pqReadCoarse(spark, storeDir)
+    val coarse = pqCoarse(spark, storeDir, gen)
     val dataDir = s"$storeDir/rows"
     val hashed = pqRequireDims(batch.dropDuplicates("id")
       .withColumn("__vh", xxhash64(col("vec")))
@@ -779,19 +810,16 @@ object Similarity {
       .getOrElse(sys.error(s"committed PQ store at $storeDir has no " +
         "readable rows"))
 
-  /** The PQ store's LIVE rows (id, codes, cell, vec_hash): committed
-    * batches only, one row per id (its max committed generation),
-    * tombstones dropped. With ONE committed batch (a freshly vacuumed
-    * or just-built store) every id has at most one row, so the per-id
-    * currency aggregate is skipped entirely and the probe is a pure
-    * pruned scan — the same maintenance dividend as the ANN twin's
-    * single-batch shortcut.
+  /** The PQ store's LIVE rows (id, codes, cell, vec_hash) among the
+    * `committed` batches: one row per id (its max committed
+    * generation), tombstones dropped. With ONE committed batch (a
+    * freshly vacuumed or just-built store) every id has at most one
+    * row, so the per-id currency aggregate is skipped entirely and the
+    * resolution is a pure scan — the same maintenance dividend as the
+    * ANN twin's single-batch shortcut.
     */
   private def pqCurrentRows(spark: org.apache.spark.sql.SparkSession,
-      storeDir: String): DataFrame = {
-    val committed = graft.sources.Commits.committed(spark, storeDir)
-    require(committed.nonEmpty,
-      s"$storeDir has no committed build - run pqStoreBuild first")
+      storeDir: String, committed: Seq[Long]): DataFrame = {
     val all = readCommittedPq(spark, storeDir, committed)
     if (committed.sizeIs == 1) all.filter(size(col("codes")) > 0)
     else all
@@ -808,7 +836,8 @@ object Similarity {
     */
   def pqStoreLiveIds(spark: org.apache.spark.sql.SparkSession,
       storeDir: String): DataFrame =
-    pqCurrentRows(spark, storeDir).select(col("id"))
+    pqLiveRows(spark, storeDir, pqGeneration(spark, storeDir))
+      .select(col("id"))
 
   /** ONE-GENERATION scoped sync of the standing PQ store —
     * [[pqStoreAppend]]'s hash-gated upsert and [[pqStoreDelete]]'s
@@ -846,12 +875,11 @@ object Similarity {
    graft.sources.Commits.withWriterLockUnless(batch.sparkSession, storeDir,
        heldLocks) {
     val spark = batch.sparkSession
-    val committed = graft.sources.Commits.committed(spark, storeDir)
-    require(committed.nonEmpty,
-      s"$storeDir has no committed build - run pqStoreBuild first")
-    val books = pqReadCodebook(spark, storeDir)
+    val gen = pqGeneration(spark, storeDir)
+    val committed = gen.batches
+    val books = pqCodebook(spark, storeDir, gen)
     val subDims = books.head.head._2.size
-    val coarse = pqReadCoarse(spark, storeDir)
+    val coarse = pqCoarse(spark, storeDir, gen)
     val dataDir = s"$storeDir/rows"
     val scope = broadcast(
       scopeKeys.select(col(scopeKeys.columns.head).as("__k"))
@@ -946,11 +974,15 @@ object Similarity {
     } finally { victims.unpersist(); idsF.unpersist(); () }
    }
 
-  /** ADC probe of the standing PQ store: one codebook read, per-query
+  /** ADC probe of the standing PQ store: the codebook, per-query
     * distance tables as in-row maps on the broadcast query side, and
     * the store's LIVE rows (max committed generation per id, tombstones
     * dropped) scored from their code ids alone — the float vectors
-    * never load. Output contract matches [[pqTopK]]; queries carry
+    * never load. Codebook, coarse centroids and live code rows are
+    * resolved once per committed generation ([[pqLiveRows]]): the first
+    * probe after a commit reads the metadata and pays the per-id
+    * currency aggregate, later probes of the unchanged store read them
+    * from cache. Output contract matches [[pqTopK]]; queries carry
     * their OWN vectors (id, vec), unlike [[pqTopK]]'s corpus-resolved
     * query ids.
     *
@@ -965,14 +997,21 @@ object Similarity {
     */
   def pqStoreTopK(spark: org.apache.spark.sql.SparkSession,
       storeDir: String, queries: DataFrame, k: Int,
-      nprobe: Int = 0): DataFrame = {
+      nprobe: Int = 0): DataFrame =
+    pqProbe(spark, storeDir, pqGeneration(spark, storeDir), queries, k,
+      nprobe)
+
+  /** [[pqStoreTopK]] against generation `gen`: codebook, coarse
+    * centroids and live code rows all come from the per-generation
+    * views, so a probe of an unchanged store resolves nothing. */
+  private def pqProbe(spark: org.apache.spark.sql.SparkSession,
+      storeDir: String, gen: graft.sources.Commits.Generation,
+      queries: DataFrame, k: Int, nprobe: Int): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
     require(nprobe >= 0, s"nprobe must be >= 0, got $nprobe")
-    require(graft.sources.Commits.committed(spark, storeDir).nonEmpty,
-      s"$storeDir has no committed build - run pqStoreBuild first")
-    val books = pqReadCodebook(spark, storeDir)
+    val books = pqCodebook(spark, storeDir, gen)
     val subDims = books.head.head._2.size
-    val cur = pqCurrentRows(spark, storeDir)
+    val cur = pqLiveRows(spark, storeDir, gen)
       .select(col("id").as("cid") +: col("cell") +:
         books.indices.map(j =>
           element_at(col("codes"), j + 1).as(s"code_$j")): _*)
@@ -990,7 +1029,7 @@ object Similarity {
           books.indices.map(j => pqTabCol(books(j), j, subDims)): _*)
         cur.crossJoin(broadcast(qtab))
       } else {
-        val coarse = pqReadCoarse(spark, storeDir).getOrElse(sys.error(
+        val coarse = pqCoarse(spark, storeDir, gen).getOrElse(sys.error(
           s"$storeDir has no coarse centroids - routed probes need a " +
             "store built with cells > 0 (pqStoreBuild's cells parameter)"))
         val rc = array_sort(transform(typedLit(coarse), c =>
@@ -1030,9 +1069,10 @@ object Similarity {
       k: Int, nprobe: Int = 0): DataFrame = {
     require(kCand >= k && k > 0,
       s"need kCand >= k > 0, got kCand=$kCand k=$k")
-    val books = pqReadCodebook(spark, storeDir)
+    val gen = pqGeneration(spark, storeDir)
+    val books = pqCodebook(spark, storeDir, gen)
     val dims = books.size * books.head.head._2.size
-    val cand = pqStoreTopK(spark, storeDir, queries, kCand, nprobe)
+    val cand = pqProbe(spark, storeDir, gen, queries, kCand, nprobe)
       .select(col("qid"), col("cid"))
     val q = queries.dropDuplicates("id")
       .select(col("id").as("qid"),
@@ -1074,7 +1114,8 @@ object Similarity {
       // ledger intact): discard and re-vacuum.
       fs.delete(new org.apache.hadoop.fs.Path(stage), true)
     }
-    val live = pqCurrentRows(spark, storeDir)
+    val live = pqCurrentRows(spark, storeDir,
+        pqGeneration(spark, storeDir).batches)
       .select(col("id"), col("codes"), col("cell"), col("vec_hash"))
       .withColumn("batch", lit(0L))
     live.write.parquet(s"$stage/b0")
@@ -1259,12 +1300,13 @@ object Similarity {
     require(trainPerMille > 0 && trainPerMille <= 1000,
       s"trainPerMille must be in (0, 1000], got $trainPerMille")
     // Like every PQ maintenance entry point: complete a crashed
-    // vacuum/reroute swap BEFORE reading, else pqCurrentRows fails
+    // vacuum/reroute swap BEFORE reading, else pqGeneration fails
     // with a misleading "no committed build" on a repairable store.
     val fs0 = new org.apache.hadoop.fs.Path(storeDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     pqRepairCrashedSwap(fs0, storeDir): Unit
-    val books = pqReadCodebook(spark, storeDir)
+    val gen = pqGeneration(spark, storeDir)
+    val books = pqCodebook(spark, storeDir, gen)
     val subDims = books.head.head._2.size
     // Reconstruction: per subspace, the code id looks up its centroid
     // from an in-row map literal; flatten to one working double array.
@@ -1274,7 +1316,7 @@ object Similarity {
           struct(c("_1"), c("_2")))),
         element_at(col("codes"), j + 1))
     }: _*))
-    val live = pqCurrentRows(spark, storeDir)
+    val live = pqCurrentRows(spark, storeDir, gen.batches)
       .select(col("id"), col("codes"), col("vec_hash"),
         recon.as("v"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -1578,14 +1620,13 @@ object Similarity {
       .agg(max(col("batch")).as("batch"),
         max_by(col("vec_hash"), col("batch")).as("vec_hash"))
 
-  /** The store's LIVE rows: committed batches only, one row per id
-    * (its max committed generation), tombstones dropped — a deleted
+  /** The store's LIVE rows among the `committed` batches: one row per
+    * id (its max committed generation), tombstones dropped — a deleted
     * id's current row is the empty-qvec tombstone, which no probe may
     * see.
     */
   private def annCurrentRows(spark: org.apache.spark.sql.SparkSession,
-      storeDir: String): DataFrame = {
-    val committed = graft.sources.Commits.committed(spark, storeDir)
+      storeDir: String, committed: Seq[Long]): DataFrame = {
     require(committed.nonEmpty, s"no committed ANN state under $storeDir")
     val all = readCommittedAnn(spark, storeDir, committed)
     // Freshly-maintained shortcut: with ONE committed batch every id
@@ -1593,7 +1634,7 @@ object Similarity {
     // append dropDuplicates, delete/vacuum/compaction aggregate per
     // id), so the per-id currency aggregate is the identity and the
     // probe becomes a pure pruned scan. This is what a full vacuum or
-    // a compaction-to-one buys the DEFAULT probe path: the store-wide
+    // a compaction-to-one buys the resolution: the store-wide
     // aggregate was its fastest-growing term across store decades
     // (SCALE.md), and regular maintenance now removes it entirely.
     if (committed.sizeIs == 1) all.filter(size(col("qvec")) > 0)
@@ -1610,7 +1651,18 @@ object Similarity {
     */
   def annStoreLiveIds(spark: org.apache.spark.sql.SparkSession,
       storeDir: String): DataFrame =
-    annCurrentRows(spark, storeDir).select(col("id"))
+    annLiveRows(spark, storeDir).select(col("id"))
+
+  /** [[annCurrentRows]] of the current committed generation, resolved
+    * once per generation and reused by every probe until the ledger
+    * moves ([[graft.sources.LiveViews]]).
+    */
+  private def annLiveRows(spark: org.apache.spark.sql.SparkSession,
+      storeDir: String): DataFrame = {
+    val gen = graft.sources.Commits.generation(spark, storeDir)
+    graft.sources.LiveViews.frame(spark, storeDir, "ann.rows", gen)(
+      annCurrentRows(spark, storeDir, gen.batches))
+  }
 
   /** DELETE ids from the standing ANN store — a tombstone generation
     * (empty qvec) per currently-live requested id; idempotent, and a
@@ -1680,7 +1732,8 @@ object Similarity {
       // ledger intact): discard and re-vacuum.
       fs.delete(new org.apache.hadoop.fs.Path(stage), true)
     }
-    val live = annCurrentRows(spark, storeDir)
+    val live = annCurrentRows(spark, storeDir,
+        graft.sources.Commits.committed(spark, storeDir))
       .withColumn("batch", lit(0L))
     live.write.parquet(s"$stage/b0")
     graft.sources.Commits.commit(spark, stage, 0L)
@@ -1921,7 +1974,7 @@ object Similarity {
       storeDir: String, outDir: String): Unit =
    graft.sources.Commits.withWriterLock(spark, storeDir) {
     val committed = graft.sources.Commits.committed(spark, storeDir)
-    annCurrentRows(spark, storeDir)
+    annCurrentRows(spark, storeDir, committed)
       .withColumn("batch", lit(0L))
       // Align the shuffle with the layout: without this every upstream
       // task writes one file into every bucket dir it sees (tasks x
@@ -1970,10 +2023,12 @@ object Similarity {
   /** Query the standing ANN store: bucket the (id, vec) queries with
     * the SAME hyperplanes the store was signed with, broadcast them
     * against their store bucket only, score exact cosine on the
-    * dequantized vectors, return per-query top-k. Never all-pairs; the
-    * candidate read is bucket-pruned, and generation currency costs one
-    * skinny (id, batch) aggregate over the store (see
-    * [[annCurrentKeys]]).
+    * dequantized vectors, return per-query top-k. Never all-pairs. The
+    * candidates come from the store's live rows ([[annLiveRows]]),
+    * resolved once per committed generation: the first probe after a
+    * commit pays the skinny (id, batch) currency aggregate
+    * ([[annCurrentKeys]]) and the join back, every later probe of the
+    * unchanged store reads the cached rows.
     */
   def annStoreTopK(spark: org.apache.spark.sql.SparkSession,
       storeDir: String, queries: DataFrame, planes: Int, dims: Int,
@@ -1982,7 +2037,7 @@ object Similarity {
       .withColumn("bucket", hyperplaneBucketCol(planes, dims))
       .select(col("id").as("qid"),
         VectorFunctions.toDoubleArray(col("vec")).as("qv"), col("bucket"))
-    val c = annCurrentRows(spark, storeDir)
+    val c = annLiveRows(spark, storeDir)
       .select(col("id").as("cid"),
         VectorFunctions.dequantizeInt8(col("qvec"), col("scale")).as("cv"),
         col("bucket"))
@@ -2106,8 +2161,9 @@ object Similarity {
             "committed) through the generational layout because " +
             partDir.fold("no partitioned layout was given")(p =>
               s"the snapshot at $p is stale") +
-            "; at this size the probe pays generation resolution " +
-            "over the full store every call - run annStorePartition " +
+            "; at this size the first probe after every commit pays " +
+            "generation resolution over the full store and the resolved " +
+            "rows stay cached in memory - run annStorePartition " +
             "in the maintenance pass (Streams.fanoutVacuum annPartDir)")
       annStoreTopK(spark, storeDir, queries, planes, dims, k, decimals)
     }
@@ -2131,7 +2187,7 @@ object Similarity {
       .select(col("id").as("qid"),
         VectorFunctions.toDoubleArray(col("vec")).as("qv"),
         explode(array(col("bucket") +: probes: _*)).as("bucket"))
-    val c = annCurrentRows(spark, storeDir)
+    val c = annLiveRows(spark, storeDir)
       .select(col("id").as("cid"), col("qvec"), col("scale"), col("bucket"))
     val cand = c.join(broadcast(q), Seq("bucket"))
       .filter(col("cid") =!= col("qid"))

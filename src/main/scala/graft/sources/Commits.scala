@@ -35,18 +35,46 @@ import org.apache.spark.sql.functions.{col, max}
   * reader ignores them — the ledger can live INSIDE a parquet
   * directory (the ANN store) or beside table subdirectories (the
   * inverted index).
+  *
+  * GENERATION CONTRACT: every mutation of a store's readable state —
+  * append, upsert, delete, vacuum, compaction, reroute, rebuild —
+  * goes through [[commit]], [[uncommit]] or [[clear]] (staged swaps
+  * rename a freshly committed staged ledger into place). Each of those
+  * creates or removes a `b<batch>` marker, so the committed markers'
+  * names and modification times ([[Generation.fingerprint]]) change
+  * with every mutation, made by this JVM or any other. Committed
+  * generations are immutable, so equal fingerprints mean equal
+  * readable state: [[LiveViews]] keys its resolved probe views on it.
+  * A mutation that bypassed the ledger would serve stale views.
   */
 object Commits {
 
-  /** Batch ids whose commit marker exists (the readable generations). */
-  def committed(spark: SparkSession, dir: String): Seq[Long] = {
+  /** A store's committed generation from one ledger listing: the
+    * committed batch ids and the fingerprint — names and modification
+    * times of the `b<batch>` markers — that changes with any commit,
+    * uncommit or clear.
+    */
+  final case class Generation(batches: Seq[Long],
+      fingerprint: Seq[(String, Long)])
+
+  /** The committed generation of the store whose ledger is at `dir`
+    * (empty when nothing is committed).
+    */
+  def generation(spark: SparkSession, dir: String): Generation = {
     val p = new org.apache.hadoop.fs.Path(s"$dir/_commits")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq
-      .map(_.getPath.getName).filter(_.startsWith("b"))
-      .map(_.drop(1).toLong)
+    val markers =
+      if (!fs.exists(p)) Seq.empty
+      else fs.listStatus(p).toSeq
+        .filter(_.getPath.getName.startsWith("b"))
+        .map(s => s.getPath.getName -> s.getModificationTime)
+        .sorted
+    Generation(markers.map(_._1.drop(1).toLong), markers)
   }
+
+  /** Batch ids whose commit marker exists (the readable generations). */
+  def committed(spark: SparkSession, dir: String): Seq[Long] =
+    generation(spark, dir).batches
 
   /** Create the marker — the append's atomic commit point. Also
     * records the batch's attempt marker (idempotent): build/vacuum

@@ -748,6 +748,24 @@ class SimilaritySpec extends SparkSpec {
     assert(!after.exists(_._2 == 3L))
   }
 
+  /** The files a probe's executed scans read: `inputFiles`, plus the
+    * scans behind the cached per-generation store views the probe reads
+    * (`inputFiles` does not descend into a cached relation).
+    */
+  private def scannedFiles(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+    def scans(p: org.apache.spark.sql.execution.SparkPlan): Seq[String] =
+      p.collect {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+          s.relation.inputFiles.toSeq
+        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+          scans(a.executedPlan)
+      }.flatten
+    df.inputFiles.toSeq ++ df.queryExecution.optimizedPlan.collect {
+      case m: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
+        scans(m.cacheBuilder.cachedPlan)
+    }.flatten
+  }
+
   test("annStoreTopKAuto routes by snapshot freshness, not caller choice") {
     val dir = java.nio.file.Files.createTempDirectory("ann-auto")
       .toString + "/idx"
@@ -764,12 +782,12 @@ class SimilaritySpec extends SparkSpec {
       df.select("qid", "cid", "score", "rnk")
         .as[(Long, Long, Double, Int)].collect().toSeq.sorted
     // Fresh snapshot -> the auto probe must READ the partitioned
-    // layout (inputFiles is the executed scan set, not a plan string).
+    // layout (the executed scan set, not a plan string).
     val auto1 = Similarity.annStoreTopKAuto(spark, dir, queries,
       planes = 4, dims = 3, k = 3, partDir = Some(part))
-    assert(auto1.inputFiles.nonEmpty &&
-      auto1.inputFiles.forall(_.contains("/part")),
-      s"expected all reads under $part, got ${auto1.inputFiles.toSeq}")
+    assert(scannedFiles(auto1).nonEmpty &&
+      scannedFiles(auto1).forall(_.contains("/part")),
+      s"expected all reads under $part, got ${scannedFiles(auto1)}")
     assert(rows(auto1) == rows(Similarity.annStoreTopK(spark, dir, queries,
       planes = 4, dims = 3, k = 3)))
     // Mutation staled the snapshot -> the auto probe must fall back to
@@ -778,9 +796,9 @@ class SimilaritySpec extends SparkSpec {
     Similarity.annStoreDelete(spark, dir, Seq(3L).toDF("id"))
     val auto2 = Similarity.annStoreTopKAuto(spark, dir, queries,
       planes = 4, dims = 3, k = 3, partDir = Some(part))
-    assert(auto2.inputFiles.nonEmpty &&
-      auto2.inputFiles.forall(_.contains("/idx")),
-      s"expected all reads under $dir, got ${auto2.inputFiles.toSeq}")
+    assert(scannedFiles(auto2).nonEmpty &&
+      scannedFiles(auto2).forall(_.contains("/idx")),
+      s"expected all reads under $dir, got ${scannedFiles(auto2)}")
     val got = rows(auto2)
     assert(!got.exists(_._2 == 3L))
     assert(got == rows(Similarity.annStoreTopK(spark, dir, queries,

@@ -187,6 +187,47 @@ class CrossJvmFanoutSpec extends SparkSpec {
       == ((0L, 0L, 0L, 0L, 0L, 0L, 0L)))
   }
 
+  test("a commit made by another JVM reaches this JVM's next probe " +
+    "through its warmed probe views") {
+    val root = java.nio.file.Files
+      .createTempDirectory("xjvm-views").toString
+    assert(gated(root, waveA, 0L) == ((2L, 2L, 2L, 2L, 2L, 0L, 0L)))
+    val terms = Seq("alpha", "fox", "river")
+    val q = Seq((101L, Seq(0.9f, 0.1f, 0.0f))).toDF("id", "vec")
+    def bm25() = Search.bm25FromIndexTopK(spark, s"$root/index", terms, 10)
+      .select("doc_id").as[Long].collect().toSet
+    def ann() = Similarity.annStoreTopK(spark, s"$root/ann", q,
+      planes = 4, dims = 3, k = 1).select("cid").as[Long].collect().toSeq
+    def pq() = Similarity.pqStoreTopK(spark, s"$root/pq", q, k = 5)
+      .select("cid").as[Long].collect().toSet
+    // Warm every view on wave A alone.
+    assert(bm25() == Set(1L))
+    assert(ann() == Seq(1L))
+    assert(pq() == Set(1L, 2L))
+
+    // A real second JVM commits wave B to every surface.
+    val p = fork("graft.streaming.FanoutRaceChild", Seq(root, "1"))
+    val out = new Output(p)
+    assert(waitBounded(p, out) == 0,
+      s"child fan-out should land; output:\n${out.all.mkString("\n")}")
+    assert(out.all.exists(_.startsWith("DONE")),
+      s"expected a DONE line:\n${out.all.mkString("\n")}")
+
+    // This JVM's next probes see the child's generation.
+    val corpus = Seq(
+      (1L, "alpha beta gamma delta epsilon"),
+      (2L, "winter storms cover northern peaks"),
+      (5L, "quick brown fox jumps high"),
+      (6L, "lazy dog sleeps under porch"),
+      (7L, "river bends around granite cliffs")).toDF("doc_id", "text")
+    assert(Search.bm25FromIndexTopK(spark, s"$root/index", terms, 10)
+      .collect().toSeq ==
+      Search.bm25TopK(corpus, "doc_id", "text", terms, 10).collect().toSeq)
+    assert(bm25() == Set(1L, 5L, 7L))
+    assert(ann() == Seq(5L), "ANN probe must surface the child's doc 5")
+    assert(pq() == Set(1L, 2L, 5L, 6L, 7L))
+  }
+
   test("a composed fan-out refuses cleanly when another JVM holds the " +
     "FIRST surface, advancing nothing") {
     val root = java.nio.file.Files
